@@ -5,13 +5,14 @@ SphinxSearchEngine_class.php:397-453) streams a SQL join through batched
 ``REPLACE INTO`` statements into searchd.  Spark-first redesign:
 
     documents DF
-      → mapInPandas tokenize (Arrow batches; unique-token stem cache —
+      → mapInArrow tokenize (Arrow batches; unique-token stem cache —
         the vectorized analog of the reference's per-row PHP loop)
-      → postings rows (term, field, docid, tf, varbyte positions, attrs)
+      → packed exchange rows (index/packed.py): one row per
+        (term, docid-salt) group of postings + a per-doc attr sideband
       → repartition on (term-bucket, docid-salt)       [the ONE shuffle]
-      → fused reducer task: sort (bucket, term, field, docid), write the
-        sorted per-bucket postings parquet files as a side output, and
-        emit the per-(term, docid) rollup rows
+      → fused reducer task: decode, sort (bucket, term, field, docid),
+        re-attach attrs, write the sorted per-bucket postings parquet
+        files as a side output, and emit the per-(term, docid) rollup
       → groupBy (bucket, term, blk) → blockmax table   [tiny shuffle]
     dictionary = blockmax rollup (blocks partition each term's docids)
     docs table = straight parallel write; n_docs observed on the write
@@ -26,13 +27,13 @@ backstop.
 Resume: each build writes a per-stage lineage manifest
 (manifests/<seg>.json) recording stage → output path + row count +
 config; a re-run with the same manifest skips completed stages
-(checkpointed segment state, north rule).
+(checkpointed segment state, north rule).  Postings and blockmax come
+out of one fused stage and are committed in one manifest write, so a
+resume either skips both or re-runs both.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import time
 
 import pandas as pd
@@ -42,11 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from sphinxsearchengine_spark import codec
 from sphinxsearchengine_spark.config import EngineConfig, FIELD_NAMES, FIELDS
 from sphinxsearchengine_spark.npsort import int_order
-from sphinxsearchengine_spark.index.layout import (
-    IndexLayout,
-    IndexMeta,
-    POSTINGS_SCHEMA,
-)
+from sphinxsearchengine_spark.index.layout import IndexLayout, IndexMeta
 
 # Document columns fed to the tokenizer, in field order (SURVEY.md §1.5):
 # content -> text(0), path -> title(1), category_search -> category_search(2).
@@ -272,8 +269,7 @@ def _field_postings(texts, docids, langs, dis, dms, fid):
     # consecutive runs of the sorted emissions, so the encoded blob IS
     # the in-order concatenation of every group's pos_vb bytes: ship the
     # blob + per-group lengths instead of slicing ~2M Python bytes
-    # objects here (r6 — pack_batch was immediately re-joining them; the
-    # row-per-posting path materializes slices in _tokenize_batch).
+    # objects here (r6 — pack_batch was immediately re-joining them).
     deltas = p_s.copy()
     deltas[1:] -= p_s[:-1]
     deltas[starts] = p_s[starts]
@@ -297,11 +293,10 @@ def _field_postings(texts, docids, langs, dis, dms, fid):
 
 def _batch_postings_columns(pdf):
     """One Arrow batch of documents -> flat postings columns dict
-    (numpy arrays + one contiguous pos_blob with per-posting pos_len) —
-    shared by the row-per-posting and packed tokenizer emitters.  Each
-    field's blob is already its groups' bytes in order, so the batch
-    blob is a plain bytes concat and per-posting starts are the
-    exclusive cumsum of pos_len."""
+    (numpy arrays + one contiguous pos_blob with per-posting pos_len),
+    the input of packed.pack_batch.  Each field's blob is already its
+    groups' bytes in order, so the batch blob is a plain bytes concat
+    and per-posting starts are the exclusive cumsum of pos_len."""
     import numpy as np
 
     docids = pdf["docid"].to_numpy(dtype=np.int64)
@@ -326,40 +321,6 @@ def _batch_postings_columns(pdf):
     return out
 
 
-def _tokenize_batch(pdf_iter):
-    """Arrow-batch tokenizer: documents -> postings rows (vectorized).
-
-    Same contract as the reference twin above (exact-word dual indexing
-    row-merged per sphinx.conf:19; tests assert bit-identical output);
-    Python-level work is bounded by *unique primary tokens* per worker —
-    the per-occurrence pipeline is numpy throughout, per BASELINE.json
-    input_hint ("no per-row Python").
-    """
-    import numpy as np
-
-    for pdf in pdf_iter:
-        out = _batch_postings_columns(pdf)
-        pl = out["pos_len"]
-        ends = np.cumsum(pl)
-        starts = ends - pl
-        buf = out["pos_blob"]
-        yield pd.DataFrame(
-            {
-                "term": out["term"],
-                "field": pd.array(out["field"], dtype="int32"),
-                "docid": pd.array(out["docid"], dtype="int64"),
-                "tf": pd.array(out["tf"], dtype="int32"),
-                "exact_tf": pd.array(out["exact_tf"], dtype="int32"),
-                "pos_vb": [
-                    buf[a:b] for a, b in zip(starts.tolist(), ends.tolist())
-                ],
-                "lang": out["lang"],
-                "date_insert": pd.array(out["date_insert"], dtype="int64"),
-                "date_modify": pd.array(out["date_modify"], dtype="int64"),
-            }
-        )
-
-
 class _split_hint:
     """Temporarily size parquet input splits so a stage reaches the
     cluster's full parallelism.  Spark bins small files into splits of
@@ -368,7 +329,7 @@ class _split_hint:
     production scale (>=128 MB files) the defaults already split fine
     and this becomes a no-op.
 
-    CONCURRENCY: this (and _whole_files) mutates session-level
+    CONCURRENCY: this mutates session-level
     spark.sql.files.* conf for the duration of the stage — run ONE build
     per SparkSession at a time; for concurrent builds use
     ``spark.newSession()`` per build so each gets its own conf."""
@@ -406,261 +367,10 @@ def block_shift_for(n_docs: int) -> int:
     return min(max(64 - bits, 0), 63)
 
 
-class _whole_files:
-    """Read parquet with one-file-per-partition (no splitting, no
-    binning): huge open cost forces every file into its own partition,
-    huge maxPartitionBytes prevents splitting a file.  Used where a
-    stage's correctness relies on file-level row co-location (blockmax
-    per-doc aggregation below)."""
-
-    def __init__(self, spark):
-        self.spark = spark
-
-    def __enter__(self):
-        conf = self.spark.conf
-        self.old_mpb = conf.get("spark.sql.files.maxPartitionBytes")
-        self.old_open = conf.get("spark.sql.files.openCostInBytes")
-        conf.set("spark.sql.files.maxPartitionBytes", str(1 << 40))
-        conf.set("spark.sql.files.openCostInBytes", str(1 << 40))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.files.maxPartitionBytes", self.old_mpb)
-        self.spark.conf.set("spark.sql.files.openCostInBytes", self.old_open)
-
-
 ROLLUP_SCHEMA = (
     "bucket int, term string, blk long, tfd long, etfd long, "
     "fmask long, dsum long"
 )
-
-
-def _rollup_pdf(pdf: pd.DataFrame, block_shift: int) -> pd.DataFrame:
-    """Doc-level rollup of one partition's postings rows (numpy): one row
-    per (term, docid) with tf/exact-tf sums, field mask, freshness sum
-    and the docid's block id.  Exact only when the partition holds EVERY
-    row of each (term, docid) it touches — guaranteed by the
-    (bucket, docid-salt) partitioning (term fixes bucket, docid fixes
-    salt)."""
-    import numpy as np
-
-    tcode, tuniq = pd.factorize(pdf["term"], sort=False)
-    pairs = np.stack(
-        [tcode.astype(np.int64), pdf["docid"].to_numpy(np.int64)], axis=1
-    )
-    uniq, inv = np.unique(pairs, axis=0, return_inverse=True)
-    n = len(uniq)
-    tfd = np.zeros(n, np.int64)
-    etfd = np.zeros(n, np.int64)
-    fmask = np.zeros(n, np.int64)
-    np.add.at(tfd, inv, pdf["tf"].to_numpy(np.int64))
-    np.add.at(etfd, inv, pdf["exact_tf"].to_numpy(np.int64))
-    np.bitwise_or.at(
-        fmask, inv, np.int64(1) << pdf["field"].to_numpy(np.int64)
-    )
-    dsum = np.zeros(n, np.int64)
-    np.maximum.at(
-        dsum, inv,
-        pdf["date_insert"].to_numpy(np.int64)
-        + pdf["date_modify"].to_numpy(np.int64),
-    )
-    bucket = np.zeros(n, np.int32)
-    bucket[inv] = pdf["bucket"].to_numpy(np.int32)
-    docids = uniq[:, 1]
-    blk = (docids.astype(np.uint64) >> np.uint64(block_shift)).astype(np.int64)
-    return pd.DataFrame(
-        {
-            "bucket": bucket,
-            "term": np.asarray(tuniq, dtype=object)[uniq[:, 0]],
-            "blk": blk,
-            "tfd": tfd,
-            "etfd": etfd,
-            "fmask": fmask,
-            "dsum": dsum,
-        }
-    )
-
-
-def _per_doc_batches(block_shift: int):
-    """Partition-local doc-level rollup of postings rows (resume
-    fallback path: blockmax derived by re-reading written postings).
-
-    Exactness relies on the write layout: postings are partitioned by
-    (bucket, docid-salt) before the per-bucket write, so ALL rows of one
-    (term, docid) live in one file, and _whole_files keeps files intact
-    per input partition — no shuffle needed for the docid level.
-    """
-
-    def gen(pdf_iter):
-        # one partition == one postings file (see _whole_files), but
-        # Arrow hands it over as ~10k-row batches — concatenate so the
-        # (term, docid) grouping sees the whole file
-        chunks = list(pdf_iter)
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        else:
-            pdf = None
-        if pdf is not None and len(pdf):
-            yield _rollup_pdf(pdf, block_shift)
-
-    return gen
-
-
-# Arrow schema of one postings file — must stay byte-compatible with
-# what Spark's own parquet writer produced in rounds 1-2 (readers are
-# unchanged; `bucket` lives in the directory name, hive-style).
-def _postings_arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("term", pa.string()),
-            ("field", pa.int32()),
-            ("docid", pa.int64()),
-            ("tf", pa.int32()),
-            ("exact_tf", pa.int32()),
-            ("pos_vb", pa.binary()),
-            ("lang", pa.string()),
-            ("date_insert", pa.int64()),
-            ("date_modify", pa.int64()),
-        ]
-    )
-
-
-def _task_write_parquet(base: str, bucket: int, pid: int, table) -> None:
-    """Executor-side parquet write of one bucket's rows to
-    ``base/bucket=<b>/part-<pid>.parquet``.
-
-    The filename is DETERMINISTIC per shuffle partition, and the write
-    goes through tmp+rename on rename-capable filesystems, so task
-    retries / speculative attempts overwrite idempotently with
-    bit-identical content (partition contents are a pure function of the
-    deterministic hash partitioning and the (bucket,term,field,docid)
-    sort; that key is unique per row, so the sort is total)."""
-    import pyarrow.parquet as pq
-
-    from sphinxsearchengine_spark import fs as _fs
-
-    fname = f"part-{pid:05d}.parquet"
-    if _fs.is_local(base):
-        import os as _os
-
-        d = _os.path.join(_fs.strip_file_scheme(base), f"bucket={bucket}")
-        _os.makedirs(d, exist_ok=True)
-        tmp = _os.path.join(d, f".{fname}.tmp")
-        pq.write_table(table, tmp, compression="snappy")
-        _os.replace(tmp, _os.path.join(d, fname))
-    else:
-        # object stores / HDFS from an executor: pyarrow.fs (the driver's
-        # JVM-backed fs.py helpers are not reachable here).  PUT is
-        # atomic on object stores; HDFS gets create-then-rename via
-        # pyarrow's HadoopFileSystem semantics.
-        from pyarrow import fs as pafs
-
-        fsys, rel = pafs.FileSystem.from_uri(f"{base}/bucket={bucket}/{fname}")
-        fsys.create_dir(rel.rsplit("/", 1)[0], recursive=True)
-        pq.write_table(table, rel, filesystem=fsys, compression="snappy")
-
-
-def _rollup_arrow(table, block_shift: int):
-    """Doc-level rollup of one task's (JVM-pre-sorted) postings Arrow
-    table — the zero-pandas twin of _rollup_pdf.  All columns come out
-    of Arrow as numpy views (fixed-width) or a C++ dictionary encode
-    (term), so the only Python-loop-free cost is a couple of segmented
-    numpy reductions."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    enc = pc.dictionary_encode(table.column("term")).combine_chunks()
-    tcode = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    tuniq = enc.dictionary.to_pylist()
-    docid = table.column("docid").to_numpy(zero_copy_only=False)
-    pairs = np.stack([tcode, docid], axis=1)
-    uniq, inv = np.unique(pairs, axis=0, return_inverse=True)
-    n = len(uniq)
-    tf = table.column("tf").to_numpy(zero_copy_only=False).astype(np.int64)
-    etf = table.column("exact_tf").to_numpy(zero_copy_only=False).astype(np.int64)
-    fld = table.column("field").to_numpy(zero_copy_only=False).astype(np.int64)
-    di = table.column("date_insert").to_numpy(zero_copy_only=False)
-    dm = table.column("date_modify").to_numpy(zero_copy_only=False)
-    bkt = table.column("bucket").to_numpy(zero_copy_only=False).astype(np.int32)
-    tfd = np.zeros(n, np.int64)
-    etfd = np.zeros(n, np.int64)
-    fmask = np.zeros(n, np.int64)
-    dsum = np.zeros(n, np.int64)
-    bucket = np.zeros(n, np.int32)
-    np.add.at(tfd, inv, tf)
-    np.add.at(etfd, inv, etf)
-    np.bitwise_or.at(fmask, inv, np.int64(1) << fld)
-    np.maximum.at(dsum, inv, di + dm)
-    bucket[inv] = bkt
-    blk = (uniq[:, 1].astype(np.uint64) >> np.uint64(block_shift)).astype(
-        np.int64
-    )
-    terms = np.asarray(tuniq, dtype=object)[uniq[:, 0]]
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(bucket, pa.int32()),
-            pa.array(terms, pa.string()),
-            pa.array(blk, pa.int64()),
-            pa.array(tfd, pa.int64()),
-            pa.array(etfd, pa.int64()),
-            pa.array(fmask, pa.int64()),
-            pa.array(dsum, pa.int64()),
-        ],
-        names=["bucket", "term", "blk", "tfd", "etfd", "fmask", "dsum"],
-    )
-
-
-def _postings_writer_and_rollup_arrow(postings_path: str, block_shift: int):
-    """mapInArrow twin of the fused writer: Arrow batches in, per-bucket
-    parquet side-output, rollup RecordBatch out.  No pandas anywhere —
-    the postings (pos_vb bytes included) never convert to Python
-    objects; the input arrives JVM-sorted by (bucket, term, field,
-    docid), so bucket boundaries are a searchsorted, and each bucket's
-    slice writes zero-copy."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark import TaskContext
-
-    def gen(batch_iter):
-        batches = list(batch_iter)
-        if not batches:
-            return
-        table = pa.Table.from_batches(batches)
-        try:
-            table = table.combine_chunks()
-        except pa.lib.ArrowInvalid:
-            # >2 GiB in one task's term/pos_vb column: 32-bit offsets
-            # overflow on concatenation (ADVICE r3).  Retry with 64-bit
-            # offset types — zero cost on the common path, and parquet
-            # writes large_* identically.
-            for name, typ in (("term", pa.large_string()),
-                              ("pos_vb", pa.large_binary())):
-                i = table.schema.get_field_index(name)
-                table = table.set_column(
-                    i, pa.field(name, typ), table.column(name).cast(typ)
-                )
-            table = table.combine_chunks()
-        if table.num_rows == 0:
-            return
-        pid = TaskContext.get().partitionId()
-        bkt = table.column("bucket").to_numpy(zero_copy_only=False)
-        bounds = np.flatnonzero(np.diff(bkt)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [len(bkt)]))
-        out_cols = table.select(
-            ["term", "field", "docid", "tf", "exact_tf", "pos_vb", "lang",
-             "date_insert", "date_modify"]
-        )
-        for s, e in zip(starts, ends):
-            _task_write_parquet(
-                postings_path, int(bkt[s]), pid, out_cols.slice(s, e - s)
-            )
-        yield _rollup_arrow(table, block_shift)
-
-    return gen
 
 
 def _manifest_load(path: str) -> dict:
@@ -684,7 +394,6 @@ def build_segment(
     salt_factor: int = 4,
     preprocess=None,
     block_shift: int | None = None,
-    packed: bool = True,
 ) -> dict:
     """Tokenize + write one immutable segment; resumable per stage.
 
@@ -695,13 +404,10 @@ def build_segment(
     SphinxSearchUpdate.php:58), kept declarative so Catalyst still
     pipelines it into the scan.
 
-    ``packed``: ship the (bucket, salt) exchange as per-(term, salt)
-    group blobs + a per-doc attr sideband instead of one row per
-    posting (index/packed.py — measured 2.42× fewer compressed shuffle
-    bytes/doc and 9.5× fewer rows at 20k docs/local[8], same warm build
-    time); False falls back to the round-4 row-per-posting path.  Both
-    produce identical postings/blockmax/dict output
-    (tests/test_packed.py)."""
+    The (bucket, salt) exchange ships per-(term, salt) group blobs + a
+    per-doc attr sideband (index/packed.py — measured 2.42× fewer
+    compressed shuffle bytes/doc and 9.5× fewer rows than one row per
+    posting at 20k docs/local[8])."""
     layout = IndexLayout(index_dir)
     man_path = layout.manifest(seg)
     manifest = _manifest_load(man_path)
@@ -711,8 +417,10 @@ def build_segment(
     def done(stage: str) -> bool:
         return stage in stages and stages[stage].get("ok")
 
-    def mark(stage: str, **info) -> None:
-        stages[stage] = {"ok": True, "ts": time.time(), **info}
+    def mark(**stage_info) -> None:
+        ts = time.time()
+        for stage, info in stage_info.items():
+            stages[stage] = {"ok": True, "ts": ts, **info}
         _manifest_save(man_path, manifest)
 
     doc_cols = [
@@ -737,7 +445,7 @@ def build_segment(
             .parquet(layout.docs(seg))
         )
         n_docs = int(obs.get["n"])
-        mark("docs", path=layout.docs(seg), n_docs=n_docs)
+        mark(docs={"path": layout.docs(seg), "n_docs": n_docs})
 
     parallelism = spark.sparkContext.defaultParallelism
 
@@ -746,33 +454,7 @@ def build_segment(
     if block_shift is None:
         block_shift = block_shift_for(stages["docs"]["n_docs"])
 
-    def _agg_blockmax(per_doc: DataFrame) -> None:
-        # Per-block max-score metadata (the north rule's block-max WAND
-        # substrate): one row per (term, ~128-docid block) with doc
-        # count, tf/exact-tf bounds, per-field presence mask and
-        # freshness bound.  The query planner prunes whole blocks from
-        # the postings scan before any positional work
-        # (query/executor._plan_blocks).  Only these pre-aggregated
-        # (term, blk) rows shuffle — the docid level never does.
-        bmx = per_doc.groupBy("bucket", "term", "blk").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("tfd").alias("hits"),
-            F.max("tfd").alias("max_tf"),
-            F.count_if(F.col("etfd") > 0).alias("n_exact"),
-            F.sum("etfd").alias("sum_etf"),
-            F.max("etfd").alias("max_etf"),
-            F.expr("bit_or(fmask)").alias("fmask"),
-            F.max("dsum").alias("max_dsum"),
-        )
-        (
-            bmx.repartition(nb, "bucket")
-            .sortWithinPartitions("bucket", "term", "blk")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(layout.blockmax(seg))
-        )
-
-    if not done("postings"):
+    if not (done("postings") and done("blockmax")):
         # FUSED postings+blockmax: one tokenize pass, ONE wide shuffle on
         # (bucket, docid-salt); each reducer task sorts its rows, writes
         # the sorted per-bucket postings files itself (deterministic
@@ -781,6 +463,7 @@ def build_segment(
         # bytes are never re-read (round 2 paid a second full scan).
         from sphinxsearchengine_spark import fs
         from sphinxsearchengine_spark import metrics as _metrics
+        from sphinxsearchengine_spark.index import packed as _packed
 
         _pre_stage = _metrics.latest_stage_id(spark)
 
@@ -797,54 +480,42 @@ def build_segment(
                 tok_src = tok_src.withColumn(
                     "content", preprocess(F.col("content"))
                 )
-            if packed:
-                # packed exchange (index/packed.py): one row per
-                # (term, salt) group + per-doc attr sideband; the writer
-                # decodes, sorts and re-attaches attrs itself, so no JVM
-                # sort is needed (far fewer, fatter rows)
-                from sphinxsearchengine_spark.index import packed as _packed
-
-                tok = tok_src.mapInArrow(
-                    _packed.packed_tokenize(nb, salt_factor),
-                    schema=_packed.PACKED_SCHEMA,
-                )
-                per_doc = (
-                    tok.repartition(nb * salt_factor, "bucket", "salt")
-                    .mapInArrow(
-                        _packed.packed_writer_and_rollup(
-                            layout.postings(seg), block_shift
-                        ),
-                        schema=ROLLUP_SCHEMA,
-                    )
-                )
-            else:
-                tok = tok_src.mapInPandas(
-                    _tokenize_batch, schema=POSTINGS_SCHEMA
-                )
-                tok = tok.withColumn(
-                    "bucket", F.pmod(F.xxhash64("term"), F.lit(nb)).cast("int")
-                ).withColumn(
-                    "salt",
-                    F.pmod(F.xxhash64("docid"), F.lit(salt_factor)).cast("int"),
-                )
-                # sort JVM-side (Tungsten radix/UTF8 sort, spillable),
-                # then a zero-pandas Arrow task writes each bucket's
-                # slice and emits the rollup — measured at local[8]/200k
-                # docs the pandas writer's object-string mergesort +
-                # to/from-pandas conversions cost ~35% of the whole
-                # postings stage
-                per_doc = (
-                    tok.repartition(nb * salt_factor, "bucket", "salt")
-                    .drop("salt")
-                    .sortWithinPartitions("bucket", "term", "field", "docid")
-                    .mapInArrow(
-                        _postings_writer_and_rollup_arrow(
-                            layout.postings(seg), block_shift
-                        ),
-                        schema=ROLLUP_SCHEMA,
-                    )
-                )
-            _agg_blockmax(per_doc)
+            # packed exchange: one row per (term, salt) group + per-doc
+            # attr sideband; the writer decodes, sorts and re-attaches
+            # attrs itself, so no JVM sort is needed (far fewer, fatter
+            # rows)
+            tok = tok_src.mapInArrow(
+                _packed.packed_tokenize(nb, salt_factor),
+                schema=_packed.PACKED_SCHEMA,
+            )
+            per_doc = tok.repartition(nb * salt_factor, "bucket", "salt").mapInArrow(
+                _packed.packed_writer_and_rollup(layout.postings(seg), block_shift),
+                schema=ROLLUP_SCHEMA,
+            )
+            # Per-block max-score metadata (the north rule's block-max
+            # WAND substrate): one row per (term, ~128-docid block) with
+            # doc count, tf/exact-tf bounds, per-field presence mask and
+            # freshness bound.  The query planner prunes whole blocks
+            # from the postings scan before any positional work
+            # (query/executor._plan_blocks).  Only these pre-aggregated
+            # (term, blk) rows shuffle — the docid level never does.
+            bmx = per_doc.groupBy("bucket", "term", "blk").agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("tfd").alias("hits"),
+                F.max("tfd").alias("max_tf"),
+                F.count_if(F.col("etfd") > 0).alias("n_exact"),
+                F.sum("etfd").alias("sum_etf"),
+                F.max("etfd").alias("max_etf"),
+                F.expr("bit_or(fmask)").alias("fmask"),
+                F.max("dsum").alias("max_dsum"),
+            )
+            (
+                bmx.repartition(nb, "bucket")
+                .sortWithinPartitions("bucket", "term", "blk")
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(layout.blockmax(seg))
+            )
         # measured shuffle volume of this step (the (bucket, salt)
         # exchange is the dominant stage by write bytes; blockmax's tiny
         # rollup exchange is included in the total) — recorded per
@@ -856,25 +527,14 @@ def build_segment(
         shuf["shuffle_bytes_per_doc"] = round(
             shuf["shuffle_write_bytes"] / max(n_docs_seg, 1), 2
         )
-        mark("postings", path=layout.postings(seg), salt_factor=salt_factor,
-             packed=packed, **shuf)
-        mark("blockmax", path=layout.blockmax(seg), block_shift=block_shift)
-
-    if not done("blockmax"):
-        # Resume fallback (postings completed by an earlier run whose
-        # blockmax didn't): derive the rollup by re-reading the postings
-        # whole-file, partition-local (the write co-located every
-        # (term, docid) in one file).
-        with _whole_files(spark):
-            post = spark.read.parquet(layout.postings(seg)).select(
-                "bucket", "term", "docid", "tf", "exact_tf", "field",
-                "date_insert", "date_modify",
-            )
-            per_doc = post.mapInPandas(
-                _per_doc_batches(block_shift), schema=ROLLUP_SCHEMA
-            )
-            _agg_blockmax(per_doc)
-        mark("blockmax", path=layout.blockmax(seg), block_shift=block_shift)
+        # both stages in ONE manifest write: the postings files alone
+        # cannot resume blockmax without a second full postings scan.
+        # bench.py reads the postings entry's `packed` flag.
+        mark(
+            postings={"path": layout.postings(seg), "salt_factor": salt_factor,
+                      "packed": True, **shuf},
+            blockmax={"path": layout.blockmax(seg), "block_shift": block_shift},
+        )
 
     if not done("dict"):
         # Dictionary stats roll up exactly from block-max rows (blocks
@@ -895,7 +555,7 @@ def build_segment(
                 .partitionBy("bucket")
                 .parquet(layout.dict(seg))
             )
-        mark("dict", path=layout.dict(seg))
+        mark(dict={"path": layout.dict(seg)})
 
     return stages
 
@@ -907,7 +567,6 @@ def build_index(
     cfg: EngineConfig | None = None,
     salt_factor: int = 4,
     preprocess=None,
-    packed: bool = True,
 ) -> IndexMeta:
     """Full bulk build: one base segment + fresh meta (reference S1/S2,
     auto-bootstrap analog of init_index, SphinxSearchEngine_class.php:484-535).
@@ -919,8 +578,7 @@ def build_index(
     layout = IndexLayout(index_dir)
     seg = "seg_00000"
     stages = build_segment(
-        spark, documents, index_dir, seg, cfg, salt_factor, preprocess,
-        packed=packed,
+        spark, documents, index_dir, seg, cfg, salt_factor, preprocess
     )
     meta = IndexMeta(
         n_docs=stages["docs"]["n_docs"],

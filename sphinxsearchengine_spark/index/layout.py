@@ -33,13 +33,6 @@ from dataclasses import asdict, dataclass, field
 
 from sphinxsearchengine_spark.config import DEFAULT_TERM_BUCKETS, FIELD_WEIGHTS
 
-# exact_tf: occurrences whose surface form equals the term itself —
-# index_exact_words=1 (sphinx.conf:19) without doubling the row count.
-# A separate '=surface' row exists only when stem(surface) != surface.
-POSTINGS_SCHEMA = (
-    "term string, field int, docid long, tf int, exact_tf int, "
-    "pos_vb binary, lang string, date_insert long, date_modify long"
-)
 DICT_COLS = ["bucket", "term", "df", "hits", "max_tf", "exact_df", "exact_hits"]
 
 

@@ -1,11 +1,11 @@
-"""Packed postings exchange (VERDICT r4 next-round #1).
+"""Packed postings exchange: the build's one wide shuffle.
 
-The round-4 build shuffled one UnsafeRow per posting — (term, field,
-docid, tf, exact_tf, pos_vb, lang, date_insert, date_modify, bucket,
-salt) — ~104 raw bytes each, measured 4005 compressed bytes/doc on the
+Shuffling one UnsafeRow per posting — (term, field, docid, tf,
+exact_tf, pos_vb, lang, date_insert, date_modify, bucket, salt) — costs
+~104 raw bytes each, measured 4005 compressed bytes/doc on the
 (bucket, salt) exchange.  At 10^12 docs that exchange IS the build's
-scaling ceiling, so this module shrinks the exchanged payload without
-touching the on-disk postings layout:
+scaling ceiling, so this module ships a packed payload instead and the
+reducer rebuilds the on-disk postings rows from it:
 
 1. **Group packing**: map tasks group postings by (term, docid-salt)
    and ship ONE row per group — ``(bucket, salt, term, blob)`` — where
@@ -25,9 +25,9 @@ touching the on-disk postings layout:
    best.
 
 2. **Attr sideband**: lang / date_insert / date_modify are PER-DOC
-   attributes the old row format repeated on every posting (~120× per
-   doc).  They now ship once per (docid, bucket-touched) in dedicated
-   attr rows (``term = NULL``) keyed to the same (bucket, salt)
+   attributes a row-per-posting exchange would repeat on every posting
+   (~120× per doc).  They ship once per (docid, bucket-touched) in
+   dedicated attr rows (``term = NULL``) keyed to the same (bucket, salt)
    partitioning, blob layout::
 
        u32      n
@@ -43,16 +43,16 @@ touching the on-disk postings layout:
    the columns before writing — the postings PARQUET files keep the
    identical denormalized schema the query path pushes filters into.
 
-Bucket/salt become pure Python-side functions (bucket = md5-low64(term)
-mod nb, salt = splitmix64(docid) mod salt_factor) — they were
-implementation-internal before (readers take bucket from the stored
-dictionary), so only the builder changes.  The reducer decode is fully
-vectorized: section offsets are computed from the Arrow binary column's
-own offset buffer and gathered with repeat/arange indexing — no
-per-posting Python anywhere (BASELINE.json input_hint).
+Bucket/salt are pure Python-side functions (bucket = md5-low64(term)
+mod nb, salt = splitmix64(docid) mod salt_factor); readers take bucket
+from the stored dictionary, never recompute it.  The reducer decode is
+fully vectorized: section offsets are computed from the Arrow binary
+column's own offset buffer and gathered with repeat/arange indexing —
+no per-posting Python anywhere (BASELINE.json input_hint).
 
-Equality with the row-per-posting path (identical postings files,
-blockmax, dict) is pytest-enforced (tests/test_packed.py).
+tests/test_packed.py checks the written postings, blockmax and dict
+against the pure-Python reference tokenizer
+(builder._tokenize_batch_ref) rolled up in pandas.
 """
 
 from __future__ import annotations
@@ -124,7 +124,6 @@ def pack_batch(out: dict, nb: int, salt_factor: int):
     """
     import pyarrow as pa
 
-    n_post = len(out["term"])
     tcodes, uniq = pd.factorize(out["term"], sort=False)
     tcodes = tcodes.astype(np.int64)
     uh = term_hashes(uniq)
@@ -134,18 +133,10 @@ def pack_batch(out: dict, nb: int, salt_factor: int):
     field = out["field"].astype(np.uint8)
     tf = out["tf"].astype("<u4")
     etf = out["exact_tf"].astype("<u4")
-    if "pos_blob" in out:
-        # contiguous per-batch blob + per-posting lengths straight from
-        # the tokenizer (r6) — no 2M-bytes-object join
-        posbuf = np.frombuffer(out["pos_blob"], dtype=np.uint8)
-        pl = out["pos_len"].astype(np.int64)
-    else:
-        pos_list = out["pos_vb"]
-        if "pos_len" in out:
-            pl = out["pos_len"].astype(np.int64)
-        else:
-            pl = np.fromiter((len(b) for b in pos_list), np.int64, n_post)
-        posbuf = np.frombuffer(b"".join(pos_list), dtype=np.uint8)
+    # contiguous per-batch blob + per-posting lengths straight from the
+    # tokenizer (r6) — no 2M-bytes-object join
+    posbuf = np.frombuffer(out["pos_blob"], dtype=np.uint8)
+    pl = out["pos_len"].astype(np.int64)
     pstart = np.cumsum(pl) - pl
 
     # (tcodes, salt, field, docid) tuples are unique — one posting per
@@ -409,36 +400,54 @@ def _pos_binary_array(pl_sorted: np.ndarray, pos_data: np.ndarray):
     )
 
 
+def _task_write_parquet(base: str, bucket: int, pid: int, table) -> None:
+    """Executor-side parquet write of one bucket's rows to
+    ``base/bucket=<b>/part-<pid>.parquet``.
+
+    The filename is DETERMINISTIC per shuffle partition, and the write
+    goes through tmp+rename on rename-capable filesystems, so task
+    retries / speculative attempts overwrite idempotently with
+    bit-identical content (partition contents are a pure function of the
+    deterministic hash partitioning and the (bucket,term,field,docid)
+    sort; that key is unique per row, so the sort is total)."""
+    import pyarrow.parquet as pq
+
+    from sphinxsearchengine_spark import fs as _fs
+
+    fname = f"part-{pid:05d}.parquet"
+    if _fs.is_local(base):
+        import os as _os
+
+        d = _os.path.join(_fs.strip_file_scheme(base), f"bucket={bucket}")
+        _os.makedirs(d, exist_ok=True)
+        tmp = _os.path.join(d, f".{fname}.tmp")
+        pq.write_table(table, tmp, compression="snappy")
+        _os.replace(tmp, _os.path.join(d, fname))
+    else:
+        # object stores / HDFS from an executor: pyarrow.fs (the driver's
+        # JVM-backed fs.py helpers are not reachable here).  PUT is
+        # atomic on object stores; HDFS gets create-then-rename via
+        # pyarrow's HadoopFileSystem semantics.
+        from pyarrow import fs as pafs
+
+        fsys, rel = pafs.FileSystem.from_uri(f"{base}/bucket={bucket}/{fname}")
+        fsys.create_dir(rel.rsplit("/", 1)[0], recursive=True)
+        pq.write_table(table, rel, filesystem=fsys, compression="snappy")
+
+
 def packed_writer_and_rollup(postings_path: str, block_shift: int):
     """mapInArrow factory: packed exchange rows -> per-bucket sorted
     postings parquet side-output + per-(term, docid) rollup batches
-    (ROLLUP_SCHEMA) — the packed twin of
-    builder._postings_writer_and_rollup_arrow.  Output files are
-    bit-identical in content: same columns, same (bucket, term, field,
-    docid) total order, attrs re-attached from the sideband."""
+    (builder.ROLLUP_SCHEMA).  Postings rows come out in (bucket, term,
+    field, docid) total order with the attrs re-attached from the
+    sideband."""
 
     def gen(batch_iter):
-        import os
-        import sys
-        import time as _time
-
         import pyarrow as pa
         import pyarrow.compute as pc
         from pyspark import TaskContext
 
-        from sphinxsearchengine_spark.index.builder import (
-            _task_write_parquet,
-        )
-
-        _trace = os.environ.get("SSE_REDUCER_TIMING") == "1"
-        _marks = [("start", _time.time())]
-
-        def _mark(label):
-            if _trace:
-                _marks.append((label, _time.time()))
-
         batches = list(batch_iter)
-        _mark("fetch")
         if not batches:
             return
         table = pa.Table.from_batches(batches)
@@ -471,7 +480,6 @@ def packed_writer_and_rollup(postings_path: str, block_shift: int):
                 "packed exchange: partition has postings but no attr "
                 "sideband rows (map side must emit both per (bucket, salt))"
             )
-        _mark("combine+filter")
         offs, data = _binary_view(table.column("blob").chunk(0))
         (lk_doc, lk_di, lk_dm, lk_lc, lk_luniq) = _decode_attr_rows(
             [
@@ -527,8 +535,7 @@ def packed_writer_and_rollup(postings_path: str, block_shift: int):
             )
 
         # unique (bucket, term, field, docid) keys — packed quicksort
-        # orders identically to the old stable lexsort
-        _mark("attr+blobdecode")
+        # orders identically to a stable lexsort
         order = int_order(docid, field, rank_of[pcode], pbkt)
         d_s = docid[order]
         f_s = field[order]
@@ -538,10 +545,8 @@ def packed_writer_and_rollup(postings_path: str, block_shift: int):
         c_s = pcode[order]
         b_s = pbkt[order]
         ai_s = ai[order]
-        tot = int(pl_s.sum())
         rep_start = pstart[order]
         pos_sorted = _gather(posdata, rep_start, pl_s)
-        _mark("sort+gather")
 
         term_dict = pa.DictionaryArray.from_arrays(
             pa.array(c_s.astype(np.int32)), pa.array(runiq)
@@ -550,6 +555,11 @@ def packed_writer_and_rollup(postings_path: str, block_shift: int):
             term_out = pc.cast(term_dict, pa.string())
         except pa.lib.ArrowInvalid:  # >2 GiB of term bytes in one task
             term_out = pc.cast(term_dict, pa.large_string())
+        # the postings file schema; `bucket` lives in the directory name
+        # (hive-style).  exact_tf: occurrences whose surface form equals
+        # the term itself — index_exact_words=1 (sphinx.conf:19) without
+        # doubling the row count.  A separate '=surface' row exists only
+        # when stem(surface) != surface.
         out_tab = pa.table(
             {
                 "term": term_out,
@@ -569,7 +579,6 @@ def packed_writer_and_rollup(postings_path: str, block_shift: int):
                 "date_modify": pa.array(lk_dm[ai_s], pa.int64()),
             }
         )
-        _mark("build_out_tab")
         pid = TaskContext.get().partitionId()
         bounds = np.flatnonzero(np.diff(b_s)) + 1
         bstarts = np.concatenate(([0], bounds))
@@ -579,7 +588,7 @@ def packed_writer_and_rollup(postings_path: str, block_shift: int):
                 postings_path, int(b_s[s]), pid, out_tab.slice(s, e - s)
             )
 
-        # ---- per-(term, docid) rollup (same math as _rollup_arrow) ----
+        # ---- per-(term, docid) rollup ----------------------------------
         # unique (term-code, docid) pairs + inverse via int64 lexsort +
         # run bounds — np.unique(axis=0) argsorts a void dtype (~3 s per
         # 2.4M-posting partition, r6 profile); output order (code asc,
@@ -589,7 +598,6 @@ def packed_writer_and_rollup(postings_path: str, block_shift: int):
         # over the runs.  The old np.add.at / bitwise_or.at scatter
         # loops were the rollup's hot spot (ufunc.at is an unvectorized
         # per-element loop, ~10x slower than reduceat; r6).
-        _mark("parquet_write")
         o2 = int_order(d_s, c_s)
         c2, d2 = c_s[o2], d_s[o2]
         newp = np.ones(len(o2), dtype=bool)
@@ -604,17 +612,6 @@ def packed_writer_and_rollup(postings_path: str, block_shift: int):
         blk = (udoc.astype(np.uint64) >> np.uint64(block_shift)).astype(
             np.int64
         )
-        _mark("rollup")
-        if _trace:
-            import json as _json
-            sys.stderr.write(
-                "REDTIME " + _json.dumps(
-                    {"pid": TaskContext.get().partitionId(),
-                     "rows": int(table.num_rows),
-                     **{lab: round(t - _marks[i][1], 3)
-                        for i, (lab, t) in enumerate(_marks[1:])}}
-                ) + "\n"
-            )
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(bucket_u, pa.int32()),

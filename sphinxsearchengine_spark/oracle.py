@@ -38,7 +38,7 @@ class OracleEngine:
         from sphinxsearchengine_spark.text.tokenizer import tokenize
 
         # term -> docid -> field -> (tf, positions, exact_tf)
-        # (exact-merged rows, mirroring index.builder._tokenize_batch)
+        # (exact-merged rows, mirroring index.builder._tokenize_batch_ref)
         self.postings: dict[str, dict[int, dict[int, tuple]]] = (
             defaultdict(lambda: defaultdict(dict))
         )
@@ -190,8 +190,10 @@ class OracleEngine:
             a = self.attrs[docid]
             if langs and a["lang"] not in langs:
                 continue
-            # per (gid, term) doc-level tf (field-restricted)
+            # per (gid, term, uex) doc-level tf (field-restricted); a key
+            # repeated in the mapping scores once (executor: same rule)
             bm25_raw = 0.0
+            scored: set[tuple] = set()
             matched_nonphrase: set[int] = set()
             # gid -> field -> positions (union over terms / phrase starts)
             gf_pos: dict[int, dict[int, set]] = defaultdict(lambda: defaultdict(set))
@@ -216,7 +218,9 @@ class OracleEngine:
                     else:
                         gf_pos[gid][fid].update(positions)
                 if tfd > 0:
-                    bm25_raw += ranker.bm25_term(idf_t, tfd, BM25_K1)
+                    if (gid, term, uex) not in scored:
+                        scored.add((gid, term, uex))
+                        bm25_raw += ranker.bm25_term(idf_t, tfd, BM25_K1)
                     if not is_pm:
                         matched_nonphrase.add(gid)
             need = set(range(n_groups)) - set(phrase_alts)

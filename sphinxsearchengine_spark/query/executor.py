@@ -40,6 +40,7 @@ from sphinxsearchengine_spark.config import (
     EXPANSION_LIMIT,
     FIELD_NAMES,
     FIELD_WEIGHTS,
+    FIELDS,
     MATCH_CAP,
 )
 from sphinxsearchengine_spark.index.layout import IndexLayout
@@ -49,6 +50,10 @@ from sphinxsearchengine_spark.text.tokenizer import stem_token
 
 _MAX_CHAR = "￿"
 _POS_BITS = 21  # 2 MB field cap → < 2^21 token positions
+# low bits of the scorer's packed (docid-rank, field) key
+_FIELD_BITS = max(1, (len(FIELDS) - 1).bit_length())
+_FIELD_MASK = (1 << _FIELD_BITS) - 1
+assert max(FIELDS.values()) <= _FIELD_MASK, "field id overflows its key slot"
 
 SCORED_SCHEMA = (
     "docid long, weight_raw double, score double, bm25 double, prox double, "
@@ -559,7 +564,7 @@ def _make_scorer(n_groups: int, phrase_alts: dict[int, dict[int, int]],
             # ascending rank), so downstream float accumulation order —
             # and with it every rounded score — is unchanged.
             codes, du = pd.factorize(docid_v, sort=True)
-            pkey = (codes.astype(np.int64) << 2) | fld_v.astype(np.int64)
+            pkey = (codes.astype(np.int64) << _FIELD_BITS) | fld_v.astype(np.int64)
             po = np.argsort(pkey)
             k_o = pkey[po]
             knew = np.ones(len(k_o), dtype=bool)
@@ -567,7 +572,7 @@ def _make_scorer(n_groups: int, phrase_alts: dict[int, dict[int, int]],
             key_of_val = np.empty(len(po), dtype=np.int64)
             key_of_val[po] = np.cumsum(knew) - 1
             ks = k_o[knew]
-            uniq = np.stack([du[ks >> 2], ks & 3], axis=1)
+            uniq = np.stack([du[ks >> _FIELD_BITS], ks & _FIELD_MASK], axis=1)
         else:
             uniq = np.empty((0, 2), dtype=np.int64)
             key_of_val = np.empty(0, dtype=np.int64)
@@ -685,9 +690,15 @@ def _make_scorer(n_groups: int, phrase_alts: dict[int, dict[int, int]],
         # --- BM25 (doc-level tf across fields, per (docid,gid,term)) ----
         # uex duplicates a term within a group (stem + exact expansion on
         # one row) — they are distinct scoring keywords, so uex is a key.
+        # One keyword can enter a group's mapping more than once (a
+        # repeated word, a word plus its own prefix expansion, a word
+        # plus a phrase member); the join then repeats its postings rows,
+        # so drop those repeats first: each keyword scores once per doc
+        # on its doc-level tf (oracle.score_matches: same rule).
         if not match_only:
             per_term = (
-                pdf.groupby(["docid", "gid", "tid", "uex"], sort=False)
+                pdf.drop_duplicates(["docid", "gid", "tid", "uex", "field"])
+                .groupby(["docid", "gid", "tid", "uex"], sort=False)
                 .agg(tfd=("tf", "sum"), idf=("idf", "first"))
                 .reset_index()
             )

@@ -34,6 +34,10 @@ QUERIES = [
     dict(query="index search"),
     dict(query="hotterm"),
     dict(query="needleuniq"),
+    # one keyword entering a group's mapping twice scores once
+    dict(query="needleuniq|needleuniq"),        # repeated word
+    dict(query="needleuni|needleuniq"),         # word + its prefix expansion
+    dict(query='needleuniq|"needleuniq hotterm"'),  # word + phrase member
     dict(query='"alpha beta"'),
     dict(query='merge|"alpha beta"'),          # kw OR phrase (ADVICE r1)
     dict(query='"alpha beta"|"index search"'),  # phrase OR phrase

@@ -148,3 +148,52 @@ def test_build_resume(spark, tmp_path):
     after = search(spark, idx, "hotterm", limit=5, now_ts=PINNED_NOW).collect()
     assert [r.docid for r in before] == [r.docid for r in after]
     assert [r.score for r in before] == [r.score for r in after]
+
+
+def _files_digest(path: str) -> list[tuple[str, str]]:
+    """(directory, sha256) of every data file under ``path``, sorted
+    (file names left out: Spark's writer puts a per-job id in them)."""
+    import glob
+    import hashlib
+    import os
+
+    out = []
+    for p in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
+        with open(p, "rb") as fh:
+            out.append((os.path.relpath(os.path.dirname(p), path),
+                        hashlib.sha256(fh.read()).hexdigest()))
+    return sorted(out)
+
+
+def test_build_resume_old_manifest(spark, tmp_path):
+    """A manifest with 'postings' but no 'blockmax' (written before the
+    two stages were committed together) re-runs the fused stage; the
+    postings come out byte-identical and search is unchanged."""
+    import json
+
+    from sphinxsearchengine_spark.index.builder import build_segment
+
+    idx = str(tmp_path / "idx")
+    docs = derive_documents(generate_corpus(spark, 60, partitions=2))
+    build_index(spark, docs, idx, CFG, salt_factor=2)
+    layout = IndexLayout(idx)
+    man_path = layout.manifest("seg_00000")
+    with open(man_path) as fh:
+        manifest = json.load(fh)
+    post_ts = manifest["stages"]["postings"]["ts"]
+    digest = _files_digest(layout.postings("seg_00000"))
+    assert digest
+    before = search(spark, idx, "hotterm", limit=5, now_ts=PINNED_NOW).collect()
+
+    for st in ["blockmax", "dict"]:
+        manifest["stages"].pop(st)
+    with open(man_path, "w") as fh:
+        json.dump(manifest, fh)
+    stages = build_segment(spark, docs, idx, "seg_00000", CFG, salt_factor=2)
+
+    assert set(stages) == {"docs", "postings", "blockmax", "dict"}
+    assert stages["postings"]["ts"] > post_ts  # the fused stage re-ran
+    assert stages["blockmax"]["ts"] == stages["postings"]["ts"]
+    assert _files_digest(layout.postings("seg_00000")) == digest
+    after = search(spark, idx, "hotterm", limit=5, now_ts=PINNED_NOW).collect()
+    assert [tuple(r) for r in before] == [tuple(r) for r in after]
